@@ -49,7 +49,7 @@ object Bench {
     * referenced across queries (each invocation rebuilds its plan
     * from scratch).
     */
-  private def resetState(spark: SparkSession): Unit = {
+  private[graft] def resetState(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
@@ -57,14 +57,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // untimed JVM/codegen warmup on the smallest sf (every query once):
     // Catalyst planning and janino codegen classes are shared across
     // scale factors, so the timed numbers then reflect steady-state
@@ -208,11 +201,28 @@ object Bench {
     System.out.flush()
   }
 
+  /** Worker threads of the bench session (`SPARK_GRAFT_CPUS`). */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The bench's Spark session — shared with `tools.Prof`, so a
+    * profile runs under exactly the settings the bench times.
+    */
+  private[graft] def session(): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** The one-line stdout summary, sized for a tail-buffered capture.
     *
     * The capture keeps only the LAST 2000 chars of output and sbt's
     * trailing "[success] Total time ..." line eats ~75 of those, so a
-    * printed line must stay ≤ ~1880 chars or its head is cut and the
+    * printed line must stay ≤ 1880 chars or its head is cut and the
     * JSON becomes unparseable. A full-name per-query seconds map is
     * ~3.5 KB; even the short-id 2-decimal map stopped fitting when the
     * suite grew past ~160 queries (r14 finding: the map silently
@@ -283,6 +293,6 @@ object Bench {
         line("queries_ds", mapOf(scaledInt(10))),
         famTop,
         bare)
-      .find(_.length <= 1900).getOrElse(bare)
+      .find(_.length <= 1880).getOrElse(bare)
   }
 }

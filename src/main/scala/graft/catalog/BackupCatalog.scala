@@ -1,5 +1,6 @@
 package graft.catalog
 
+import graft.engine.{AtomicDir, Compactor}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 
@@ -63,26 +64,16 @@ final class BackupCatalog(spark: SparkSession, root: String,
     spark.createDataset(rows)
   }
 
-  /** Crash recovery for a compaction swap: if a crash left a store
-    * with `<dir>__old` (the previous copy) but no live dir, the old
-    * copy is the truth — restore it before any read or write. All
-    * three append logs compact through the same swap, so all three
-    * are checked.
+  /** Crash recovery for a compaction swap ([[graft.engine.AtomicDir
+    * .recover]]): a crash between the renames leaves a store with only
+    * its previous copy, which is restored before any read or write. All
+    * four append logs compact through the same swap, so all are checked.
     */
-  private def recoverIfNeeded(): Unit =
-    // the JVM-wide swap lock: two catalog INSTANCES on one root would
-    // otherwise race a recovery against an in-flight compaction swap
-    // (instance-level synchronized cannot see the other instance)
-    graft.engine.Compactor.swapLock.synchronized {
-      val f = fs(root)
-      Seq(sessionsDir, tablesDir, descsDir, purgesDir).foreach { dir =>
-        val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
-        if (!f.exists(p) && f.exists(pOld)) {
-          require(f.rename(pOld, p),
-            s"catalog recovery failed: cannot restore $pOld to $p")
-        }
-      }
-    }
+  private def recoverIfNeeded(): Unit = {
+    val f = fs(root)
+    Seq(sessionsDir, tablesDir, descsDir, purgesDir)
+      .foreach(AtomicDir.recover(f, _))
+  }
 
   /** The sessions store is an append-structured log: [[startInfo]] and
     * [[endInfo]] only ever APPEND rows, and this read resolves the log
@@ -171,41 +162,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
   private def dataFileCount(dir: String): Int = {
     val p = new Path(dir)
     val f = fs(dir)
-    if (!f.exists(p)) 0
-    else f.listStatus(p).count { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
-
-  /** Fold a compacted copy of a store into place. The rewrite goes
-    * through a temp dir + two renames so a crash can lose at most the
-    * in-flight fold, never the existing catalog (a plain Overwrite
-    * deletes-then-writes, leaving a destroyed store dir if killed
-    * mid-way — fatal for a catalog whose whole job is surviving
-    * crashed runs). `writeCompacted` receives the temp path; every
-    * rename is checked, and [[recoverIfNeeded]] restores `<dir>__old`
-    * if a crash lands between the renames.
-    */
-  private def swapCompacted(dir: String)(
-      writeCompacted: String => Unit): Unit = {
-    val tmp = dir + "__tmp"
-    writeCompacted(tmp)
-    val f = fs(root)
-    // rename pair under the JVM-wide swap lock — see recoverIfNeeded
-    graft.engine.Compactor.swapLock.synchronized {
-      val (pDir, pTmp, pOld) =
-        (new Path(dir), new Path(tmp), new Path(dir + "__old"))
-      if (f.exists(pOld)) require(f.delete(pOld, true), s"cannot clear $pOld")
-      if (f.exists(pDir))
-        require(f.rename(pDir, pOld), s"cannot stage $pDir to $pOld")
-      if (!f.rename(pTmp, pDir)) {
-        // roll back so the catalog is never left without a live dir
-        if (f.exists(pOld)) f.rename(pOld, pDir)
-        throw new IllegalStateException(s"cannot swap $pTmp into $pDir")
-      }
-      f.delete(pOld, true) // old copy only removed after a complete swap
-    }
+    if (!f.exists(p)) 0 else Compactor.dataFiles(f, p).length
   }
 
   /** Purge a session — the takedown path the append-only logs
@@ -243,9 +200,15 @@ final class BackupCatalog(spark: SparkSession, root: String,
   }
 
   /** Fold the sessions log back to one row per session (purged
-    * sessions drop out — the folds read through the purge filter). */
+    * sessions drop out — the folds read through the purge filter).
+    * Every fold publishes through [[graft.engine.AtomicDir.replace]],
+    * so a crash can lose at most the in-flight fold, never the existing
+    * catalog (a plain Overwrite deletes-then-writes, leaving a
+    * destroyed store dir if killed mid-way — fatal for a catalog whose
+    * whole job is surviving crashed runs).
+    */
   private def compactSessions(): Unit =
-    swapCompacted(sessionsDir) { tmp =>
+    AtomicDir.replace(fs(root), sessionsDir) { tmp =>
       sessions.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
 
@@ -259,13 +222,13 @@ final class BackupCatalog(spark: SparkSession, root: String,
     * recorded table forever.
     */
   private def compactTables(): Unit =
-    swapCompacted(tablesDir) { tmp =>
+    AtomicDir.replace(fs(root), tablesDir) { tmp =>
       tables.collect().toSeq.distinct
         .toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
 
   private def compactDescriptors(): Unit =
-    swapCompacted(descsDir) { tmp =>
+    AtomicDir.replace(fs(root), descsDir) { tmp =>
       descriptors.collect().toSeq.distinct
         .toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     }
@@ -281,7 +244,7 @@ final class BackupCatalog(spark: SparkSession, root: String,
     */
   private def compactPurges(): Unit = {
     if (!hasCommittedFiles(purgesDir)) return
-    swapCompacted(purgesDir) { tmp =>
+    AtomicDir.replace(fs(root), purgesDir) { tmp =>
       readOrEmpty[PurgeRecord](purgesDir).collect().toSeq
         .groupBy(p => (p.mode, p.session_name)).values
         .map(g => g.minBy(_.purged_at)).toSeq

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -25,10 +25,10 @@ import org.apache.spark.sql.functions._
   *  - partitioned layouts compact each leaf partition independently —
   *    the unit of rewrite (and of failure) is one partition, never the
   *    table;
-  *  - the swap is the catalog's checked-rename protocol (dir → __old,
-  *    tmp → dir, drop __old): a crash can leave a stale __old copy but
-  *    never a half-written destination, and `recover` restores a
-  *    destination whose swap died between the renames;
+  *  - the swap is [[AtomicDir.replace]]: a crash can leave a stale
+  *    copy but never a half-written destination, and
+  *    [[AtomicDir.recover]] restores a destination (or partition)
+  *    whose swap died between the renames;
   *  - a footer-count integrity gate (rows after == rows before) aborts
   *    the swap rather than publishing a lossy rewrite.
   *
@@ -44,25 +44,24 @@ object Compactor {
   private[graft] def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def dataFiles(f: FileSystem, dir: Path) =
+  /** A store dir's data files: Spark's `_`/`.` bookkeeping excluded. */
+  private[graft] def dataFiles(f: FileSystem, dir: Path): Array[FileStatus] =
     f.listStatus(dir).filter { s =>
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
-  private def partitionDirs(f: FileSystem, dir: Path): Seq[Path] =
-    f.listStatus(dir).filter(s => s.isDirectory &&
-      s.getPath.getName.contains("=")).map(_.getPath).toSeq
-
-  /** Crash recovery: a swap that died after staging leaves
-    * `<dir>__old` with no `<dir>` — the old copy is the truth.
+  /** Output file count for a `bytes`-sized rewrite at ~`targetBytes`
+    * per file (at least one).
     */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val (p, pOld) = (new Path(dir), new Path(dir + "__old"))
-    if (!f.exists(p) && f.exists(pOld))
-      require(f.rename(pOld, p), s"compaction recovery failed for $dir")
-  }
+  private[graft] def targetFiles(bytes: Long, targetBytes: Long): Int =
+    math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+
+  private def partitionDirs(f: FileSystem, dir: Path): Seq[Path] =
+    f.listStatus(dir).filter { s =>
+      val n = s.getPath.getName
+      s.isDirectory && n.contains("=") && !AtomicDir.isArtifact(n)
+    }.map(_.getPath).toSeq
 
   /** Compact one directory (recursing into Hive partition dirs) to
     * ~targetBytes files. No-ops (and says so in the report) when the
@@ -71,8 +70,11 @@ object Compactor {
   def compact(spark: SparkSession, dir: String,
               targetBytes: Long = 512L << 20,
               zorderCols: Seq[String] = Nil): Report = {
-    recover(spark, dir)
     val f = fs(spark, dir)
+    AtomicDir.recover(f, dir)
+    // a partition whose swap crashed must be restored (and its stale
+    // copies cleared) before the listing, or it reads as a partition
+    AtomicDir.recoverChildren(f, dir)
     val root = new Path(dir)
     val parts = partitionDirs(f, root)
     if (parts.nonEmpty) {
@@ -87,7 +89,7 @@ object Compactor {
 
     val files = dataFiles(f, root)
     val bytes = files.map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    val nOut = targetFiles(bytes, targetBytes)
     // nothing to rewrite: no files means no rows to cluster either —
     // a zorder request on an empty dir is a no-op, not a crash
     if (files.isEmpty)
@@ -100,69 +102,21 @@ object Compactor {
         TableOps.parquetRowCount(spark, dir), compacted = false)
 
     val rowsBefore = TableOps.parquetRowCount(spark, dir)
-    val tmp = dir + "__compact_tmp"
-    f.delete(new Path(tmp), true)
-    val src = spark.read.parquet(dir)
-    val rewritten =
-      if (zorderCols.nonEmpty) Layout.zorderBy(src, zorderCols, nOut)
-      else src.coalesce(nOut)
-    rewritten.write.mode("overwrite").parquet(tmp)
-
-    val rowsAfter = TableOps.parquetRowCount(spark, tmp)
-    if (rowsAfter != rowsBefore) {
-      f.delete(new Path(tmp), true)
-      throw new IllegalStateException(
-        s"compaction of $dir dropped rows ($rowsBefore -> $rowsAfter); aborted")
+    AtomicDir.replace(f, dir) { stage =>
+      val src = spark.read.parquet(dir)
+      val rewritten =
+        if (zorderCols.nonEmpty) Layout.zorderBy(src, zorderCols, nOut)
+        else src.coalesce(nOut)
+      rewritten.write.mode("overwrite").parquet(stage)
+      val rowsAfter = TableOps.parquetRowCount(spark, stage)
+      if (rowsAfter != rowsBefore)
+        throw new IllegalStateException(s"compaction of $dir dropped " +
+          s"rows ($rowsBefore -> $rowsAfter); aborted")
     }
-    swapInto(f, dir, tmp)
     val after = dataFiles(f, root)
     Report(dir, files.length, after.length, after.map(_.getLen).sum,
-      rowsAfter, compacted = true)
+      rowsBefore, compacted = true)
   }
-
-  /** JVM-wide lock serializing every checked-rename swap against every
-    * crash recovery (the `recoverIfSwapped` family): without it, a
-    * reader thread probing between [[swapInto]]'s two renames sees
-    * "root missing, __old present" — the crashed-swap signature — and
-    * renames `__old` BACK, making the live swap's tmp→root rename fail
-    * AND its rollback fail (root re-occupied), aborting a healthy
-    * rebuild. One JVM-wide object is enough in-process because every
-    * swap and every recovery path takes it; ACROSS processes the
-    * stores assume a single writer (the catalog's own single-instance
-    * discipline) — two JVMs rebuilding or recovering the same store
-    * path concurrently are out of contract.
-    */
-  private[graft] val swapLock = new Object
-
-  /** Carry sidecars into the rewrite, then publish it over `dir` via
-    * the checked-rename swap (dir → __old, tmp → dir, drop __old).
-    */
-  private[graft] def swapInto(f: FileSystem, dir: String,
-                              tmp: String): Unit =
-    // the cross-process writer lease wraps the in-process swap lock
-    // (lease outer, swapLock inner — everywhere, so no lock-order
-    // inversion); reentrant, so a rebuild that already leased the
-    // store publishes through here without re-acquiring
-    StoreLease.withLease(f, dir) { swapLock.synchronized {
-    val (p, pTmp, pOld) = (new Path(dir), new Path(tmp), new Path(dir + "__old"))
-    // sidecars (_export_info.log etc.) move into the rewrite before the
-    // swap so the published dir keeps its provenance; the rewrite's own
-    // _SUCCESS already exists in tmp
-    f.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && n.startsWith("_") && n != "_SUCCESS"
-    }.foreach { s =>
-      require(f.rename(s.getPath, new Path(pTmp, s.getPath.getName)),
-        s"cannot carry sidecar ${s.getPath} into the compacted dir")
-    }
-    if (f.exists(pOld)) require(f.delete(pOld, true), s"cannot clear $pOld")
-    require(f.rename(p, pOld), s"cannot stage $p to $pOld")
-    if (!f.rename(pTmp, p)) {
-      f.rename(pOld, p) // roll back: never leave the dest missing
-      throw new IllegalStateException(s"cannot swap $pTmp into $p")
-    }
-    f.delete(pOld, true)
-    () } }
 
   final case class MajorReport(dir: String, rowsBefore: Long,
                                rowsAfter: Long, files: Int)
@@ -188,11 +142,11 @@ object Compactor {
                    nowMs: Long = 0L,
                    targetBytes: Long = 512L << 20): MajorReport = {
     require(keyCols.nonEmpty, "major compaction needs the row key columns")
-    recover(spark, dir)
     val f = fs(spark, dir)
+    AtomicDir.recover(f, dir)
     val rowsBefore = TableOps.parquetRowCount(spark, dir)
-    val bytes = dataFiles(f, new Path(dir)).map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    val nOut = targetFiles(dataFiles(f, new Path(dir)).map(_.getLen).sum,
+      targetBytes)
 
     val df = spark.read.parquet(dir)
     // HBase expiry is `now - ts >= ttl` (strict survival: ts > now-ttl).
@@ -210,11 +164,10 @@ object Compactor {
       } else df
     val kept = Exporter.versionCap(alive, keyCols, tsCol, tieBreakCols,
       maxVersions)
-    val tmp = dir + "__compact_tmp"
-    f.delete(new Path(tmp), true)
-    kept.coalesce(nOut).write.mode("overwrite").parquet(tmp)
-    val rowsAfter = TableOps.parquetRowCount(spark, tmp)
-    swapInto(f, dir, tmp)
+    val rowsAfter = AtomicDir.replace(f, dir) { stage =>
+      kept.coalesce(nOut).write.mode("overwrite").parquet(stage)
+      TableOps.parquetRowCount(spark, stage)
+    }
     MajorReport(dir, rowsBefore, rowsAfter,
       dataFiles(f, new Path(dir)).length)
   }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Mechanical cross-process writer guard for the persisted stores
   * (r14) — the lease file that turns the "single writer per store
-  * across processes" CONTRACT ([[Compactor.swapLock]]'s scaladoc)
+  * across processes" CONTRACT ([[AtomicDir]]'s scaladoc)
   * into a loud refusal instead of silent corruption when a scheduler
   * double-launches a rebuild from two drivers.
   *
@@ -28,13 +28,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *    than retrying — two simultaneous takeovers cannot both win;
   *  - release deletes the file (in `finally` — failures release too);
   *  - reentrant per (thread, store): a rebuild that publishes through
-  *    [[Compactor.swapInto]] acquires once, nested acquisitions are
+  *    [[AtomicDir.replace]] acquires once, nested acquisitions are
   *    counted. A SECOND thread in the same JVM refuses exactly like a
   *    second process would.
   *
   * What this does NOT cover (documented contract, unchanged): READERS
-  * never take leases — crash-recovery renames (`recoverIfSwapped`)
-  * are reader-side and serialize only in-process via `swapLock`; a
+  * never take leases — crash-recovery renames ([[AtomicDir.recover]])
+  * are reader-side and serialize only in-process via its lock; a
   * reader in another process during a writer's swap window remains
   * out of contract. The lease closes the WRITER-vs-WRITER hole — the
   * one a real scheduler actually hits.
@@ -59,8 +59,10 @@ object StoreLease {
   private val held =
     scala.collection.mutable.Map.empty[String, (Long, Int)]
 
+  private[graft] val Suffix = "__lease"
+
   private[graft] def leasePath(root: String): Path =
-    new Path(root.stripSuffix("/") + "__lease")
+    new Path(root.stripSuffix("/") + Suffix)
 
   private def describe(fs: FileSystem, p: Path): String =
     try {

@@ -96,13 +96,13 @@ object TableOps {
   /** Payload-plane takedown for a purged session ([EXT], r13 — the
     * disk half of BackupCatalog.purgeSession): delete the session's
     * export tree `<destRoot>/<session>/` (the reference layout,
-    * export.rb:76) through the checked-rename discipline. The live dir
-    * is first RENAMED to `<session>__purging` — one atomic namespace
-    * operation, so a reader never lists a half-deleted session — and
-    * only the staged dir is deleted recursively. A crash mid-delete
-    * leaves `__purging`, which the NEXT invocation resumes deleting
-    * (the recoverIfSwapped discipline, inverted: here the orphan dir
-    * is garbage, not truth); a replay with everything already gone is
+    * export.rb:76) under [[AtomicDir]]'s lock. The live dir is first
+    * RENAMED to `<session>__purging` — one atomic namespace operation,
+    * so a reader never lists a half-deleted session — and only the
+    * staged dir is deleted recursively. A crash mid-delete leaves
+    * `__purging`, which the NEXT invocation resumes deleting
+    * ([[AtomicDir.recover]] inverted: here the orphan dir is garbage,
+    * not truth); a replay with everything already gone is
     * a clean no-op. Returns true if any payload was removed (live or
     * a crashed stage), false for the nothing-to-do replay.
     *
@@ -120,13 +120,13 @@ object TableOps {
     val live = new Path(root + session)
     val staged = new Path(root + session + "__purging")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // only the NAMESPACE transition needs the swap lock (stage-clear
+    // only the NAMESPACE transition needs AtomicDir's lock (stage-clear
     // when a rename target must be freed + the live->__purging
     // rename); the recursive delete of the staged tree runs OUTSIDE
     // it — a large export's takedown must not stall every store swap,
     // crash recovery, and existence probe in the process (r13 ADVICE)
     val (hadLive, hadStaged) =
-      graft.engine.Compactor.swapLock.synchronized {
+      AtomicDir.lock.synchronized {
         val hadStaged = fs.exists(staged)
         val hadLive = fs.exists(live)
         if (hadLive) {

@@ -253,6 +253,7 @@ object ZoneMap {
     val target = dir + "/_zonemap"
     val fs = new Path(target).getFileSystem(
       spark.sessionState.newHadoopConf())
+    AtomicDir.recover(fs, target)
     if (!fs.exists(new Path(target))) return write(spark, dir, cols)
     import spark.implicits._
     val existing = spark.read.parquet(target)
@@ -283,16 +284,13 @@ object ZoneMap {
       if (dead.isEmpty) existing
       else existing.filter(!col("file").isin(dead: _*))
     // write-then-swap: the source sidecar is part of this plan's
-    // input, so stage the new one next to it (underscore prefix =
-    // invisible to data readers and to listParquet) and rename over.
-    // The sidecar is a derived index — a crash between delete and
-    // rename loses nothing a re-update can't restore.
-    val tmp = new Path(dir + "/_zonemap.staging")
-    kept.unionByName(spark.createDataset(added).toDF()).coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(new Path(target), true)
-    require(fs.rename(tmp, new Path(target)),
-      s"zonemap swap failed: rename $tmp -> $target")
+    // input, so the new one is staged next to it (its underscore
+    // prefix keeps the stage invisible to data readers and to
+    // listParquet) and swapped in by AtomicDir
+    AtomicDir.replace(fs, target) { stage =>
+      kept.unionByName(spark.createDataset(added).toDF()).coalesce(1)
+        .write.mode(SaveMode.Overwrite).parquet(stage)
+    }
     // the swap happened behind Spark's FileStatusCache (a datasource
     // Overwrite would have refreshed it; a raw FS rename does not) —
     // without this, the next sidecar read resolves deleted part files

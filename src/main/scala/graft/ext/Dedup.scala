@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.engine.{AtomicDir, Compactor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -610,15 +611,18 @@ object Dedup {
       val spark = pairs.sparkSession
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.types._
+      // the loop's schema: its three columns are nullable exactly when
+      // the (symmetric, so uniformly typed) edge columns are
+      val nullable = edges.schema("src").nullable
       return spark.createDataFrame(
         nodes.toSeq.map { id =>
           val root = find(id)
           org.apache.spark.sql.Row(id, root, id == root)
         }.asJava,
         StructType(Seq(
-          StructField("doc_id", LongType, nullable = false),
-          StructField("cluster_id", LongType, nullable = false),
-          StructField("survivor", BooleanType, nullable = false))))
+          StructField("doc_id", LongType, nullable),
+          StructField("cluster_id", LongType, nullable),
+          StructField("survivor", BooleanType, nullable))))
     }
     clustersLoop(edges, maxIters)
   }
@@ -938,7 +942,7 @@ object Dedup {
   def initSignaturesIfStale(docs: DataFrame, path: String,
                             n: Int = 3): Boolean = {
     val spark = docs.sparkSession
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val fs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = fs.exists(bp) && {
@@ -955,28 +959,18 @@ object Dedup {
   /** Existence probe that first recovers a crash-interrupted
     * [[compactSignatures]] swap — the [[graft.ext.Retrieval
     * .indexExists]] discipline on the dedup plane: after a crash
-    * between the swap's renames the root is missing but `<path>__old`
-    * holds the truth, and a raw FileSystem probe would report "no
-    * store" for one a single rename away from live.
+    * between the swap's renames the root is missing but its previous
+    * copy holds the truth ([[graft.engine.AtomicDir.recover]]), and a
+    * raw FileSystem probe would report "no store" for one a single
+    * rename away from live.
     */
   def storeExists(spark: org.apache.spark.sql.SparkSession,
                   path: String): Boolean = {
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p)
   }
-
-  private def recoverIfSwapped(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pOld = new org.apache.hadoop.fs.Path(path + "__old")
-      if (!fs.exists(p) && fs.exists(pOld))
-        require(fs.rename(pOld, p),
-          s"signature store recovery failed: cannot restore $pOld to $p")
-    }
 
   /** Read the signature store. Appends are made idempotent HERE, not
     * at write time: a retried [[updateSignatures]] may leave duplicate
@@ -988,7 +982,7 @@ object Dedup {
     */
   def readSignatures(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     spark.read.parquet(path).dropDuplicates("doc_id")
       .join(sigTombstones(spark, path).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
@@ -1029,26 +1023,23 @@ object Dedup {
   }
 
   /** Physically compact the signature store: rewrite it as the folded,
-    * tombstone-free row set in few sized files via the engine's
-    * checked-rename swap. Read results unchanged by construction;
-    * the physics of N drains' append files stop accumulating.
+    * tombstone-free row set in few sized files via
+    * [[graft.engine.AtomicDir.replace]]. Read results unchanged by
+    * construction; the physics of N drains' append files stop
+    * accumulating.
     */
   def compactSignatures(spark: org.apache.spark.sql.SparkSession,
                         path: String,
                         targetBytes: Long = 512L << 20): Unit = {
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no signature store at $path")
-    val bytes = fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-    val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    // cross-process writer lease across the whole rewrite (r14)
-    graft.engine.StoreLease.withLease(fs, path) {
-      val tmp = path + "__compact_tmp"
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    val nOut = Compactor.targetFiles(
+      Compactor.dataFiles(fs, p).map(_.getLen).sum, targetBytes)
+    AtomicDir.replace(fs, path) { stage =>
       readSignatures(spark, path).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(fs, path, tmp)
+        .write.mode("overwrite").parquet(stage)
     }
   }
 
@@ -1078,7 +1069,7 @@ object Dedup {
     * stays taken down until a re-bootstrap.
     */
   def updateSignatures(newDocs: DataFrame, path: String, n: Int = 3): Unit = {
-    recoverIfSwapped(newDocs.sparkSession, path)
+    AtomicDir.recover(newDocs.sparkSession, path)
     requireDlSchema(newDocs.sparkSession, path)
     signatureRowsWithDl(newDocs, n)
       .join(sigTombstones(newDocs.sparkSession, path)
@@ -1119,7 +1110,7 @@ object Dedup {
     // baseline gate FIRST: a pre-r13 store has neither the baseline
     // nor the dl column, and the stats aggregate below would throw an
     // analysis error instead of the actionable message
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(bfs.exists(bp),
@@ -1144,7 +1135,7 @@ object Dedup {
     val spark = docs.sparkSession
     // re-shingle with the STORE's own width (recorded at init) — a
     // twin at a different n would compare incomparable pair masses
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     val bp = new org.apache.hadoop.fs.Path(path + "_baseline")
     val bfs = bp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(bfs.exists(bp),
@@ -1222,7 +1213,7 @@ object Dedup {
     */
   def updatePairs(newDocs: DataFrame, path: String, n: Int = 3): DataFrame = {
     val spark = newDocs.sparkSession
-    recoverIfSwapped(spark, path)
+    AtomicDir.recover(spark, path)
     requireDlSchema(spark, path)
     // the tombstone gate sits on BOTH legs: the append (no dead rows
     // re-enter the store) and the delta band side below (a tombstoned

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.engine.{AtomicDir, Compactor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -274,7 +275,7 @@ object Retrieval {
   /** The deletion facts (doc_id, deleted_at) — empty when none. */
   private def tombstones(spark: org.apache.spark.sql.SparkSession,
                          indexStore: String): DataFrame = {
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     readStore(spark, s"$indexStore/tombstones",
       "CAST(0 AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS deleted_at")
   }
@@ -305,7 +306,7 @@ object Retrieval {
   private def liveStore(spark: org.apache.spark.sql.SparkSession,
                         indexStore: String, sub: String,
                         schema: String): DataFrame = {
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     readStore(spark, s"$indexStore/$sub", schema)
       .join(tombstones(spark, indexStore).select(col("doc_id")),
         Seq("doc_id"), "left_anti")
@@ -322,11 +323,11 @@ object Retrieval {
 
   /** Physically compact the postings + lengths stores: rewrite each as
     * its folded, tombstone-free row set in few sized files, published
-    * via the engine's checked-rename swap ([[graft.engine.Compactor
-    * .swapInto]]). Query results unchanged by construction (reads
-    * already fold + anti-join); N streaming drains' small append files
-    * and replay duplicates stop accumulating. Tombstones stay (cheap
-    * facts; they still gate [[updateIndex]]).
+    * via [[graft.engine.AtomicDir.replace]]. Query results unchanged
+    * by construction (reads already fold + anti-join); N streaming
+    * drains' small append files and replay duplicates stop
+    * accumulating. Tombstones stay (cheap facts; they still gate
+    * [[updateIndex]]).
     */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    indexStore: String,
@@ -336,21 +337,16 @@ object Retrieval {
       val p = new org.apache.hadoop.fs.Path(dir)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       require(f.exists(p), s"no $sub store at $indexStore")
-      def dataFiles = f.listStatus(p).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      val before = dataFiles
+      val before = Compactor.dataFiles(f, p)
       val rowsBefore = spark.read.parquet(dir).count()
-      val bytes = before.map(_.getLen).sum
-      val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val tmp = dir + "__compact_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      liveStore(spark, indexStore, sub, schema).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(f, dir, tmp)
+      val nOut =
+        Compactor.targetFiles(before.map(_.getLen).sum, targetBytes)
+      AtomicDir.replace(f, dir) { stage =>
+        liveStore(spark, indexStore, sub, schema).coalesce(nOut)
+          .write.mode("overwrite").parquet(stage)
+      }
       (rowsBefore, spark.read.parquet(dir).count(),
-        before.length, dataFiles.length)
+        before.length, Compactor.dataFiles(f, p).length)
     }
     // leased on the STORE root across BOTH sub-store rewrites, so a
     // compaction and a rebuild of the same index exclude each other
@@ -579,7 +575,7 @@ object Retrieval {
         .collect()(0)
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     val metaPath = new org.apache.hadoop.fs.Path(s"$indexStore/meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fp = fingerprint()
@@ -629,19 +625,18 @@ object Retrieval {
 
   /** ATOMIC index rebuild — [[graft.ext.VectorIndex.rebuild]]'s
     * discipline on the lexical plane, the action a tripped s26
-    * advisory takes: re-tokenize into a STAGED sibling
-    * (`<store>__rebuild_tmp`) with a fresh baseline and fingerprint,
-    * then publish via the checked-rename swap. A reader at ANY point
-    * during the rebuild serves the OLD store (spec-pinned via the
-    * beforeSwap hook); the swap is all-or-nothing; a crash between
-    * its renames restores from `__old` on the next read. Tombstones
-    * clear with the rebuild (re-init semantics).
+    * advisory takes: re-tokenize into a STAGED sibling with a fresh
+    * baseline and fingerprint, then publish via
+    * [[graft.engine.AtomicDir.replace]]. A reader at ANY point during
+    * the rebuild serves the OLD store (spec-pinned via the beforeSwap
+    * hook); the swap is all-or-nothing; a crash between its renames
+    * restores the previous copy on the next read. Tombstones clear
+    * with the rebuild (re-init semantics).
     *
     * Writer contract ([[graft.ext.VectorIndex.rebuild]]'s): ONE
     * rebuilder per store path at a time, in the process that owns the
-    * store. In-process, [[graft.engine.Compactor.swapLock]] serializes
-    * the swap against every read's crash recovery; across processes
-    * nothing can.
+    * store. In-process, AtomicDir's lock serializes the swap against
+    * every read's crash recovery; across processes nothing can.
     */
   def rebuildIndex(docs: DataFrame, indexStore: String): Unit =
     rebuildIndex(docs, indexStore, () => ())
@@ -649,7 +644,7 @@ object Retrieval {
   private[graft] def rebuildIndex(docs: DataFrame, indexStore: String,
                                   beforeSwap: () => Unit): Unit = {
     val spark = docs.sparkSession
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(indexStore)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),
@@ -661,13 +656,10 @@ object Retrieval {
       .collect()(0)
     // the writer lease spans the whole re-tokenize (r14): a
     // double-launched rebuild refuses at entry, never races the swap
-    graft.engine.StoreLease.withLease(f, indexStore) {
-      val tmp = indexStore + "__rebuild_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      buildInto(docs, tmp, (fpRow.getLong(0), fpRow.getLong(1),
+    AtomicDir.replace(f, indexStore) { stage =>
+      buildInto(docs, stage, (fpRow.getLong(0), fpRow.getLong(1),
         fpRow.getLong(2), fpRow.getLong(3)))
       beforeSwap()
-      graft.engine.Compactor.swapInto(f, indexStore, tmp)
     }
   }
 
@@ -675,33 +667,17 @@ object Retrieval {
     * [[rebuildIndex]] swap — the [[graft.ext.VectorIndex.exists]]
     * discipline. The CLI (and any caller gating on "is there a store
     * here?") must use THIS, not a raw FileSystem.exists: after a crash
-    * between the swap's renames the root is missing but `__old` holds
-    * the truth, and a raw probe would report "no index store" for a
-    * store one rename away from being served.
+    * between the swap's renames the root is missing but its previous
+    * copy holds the truth, and a raw probe would report "no index
+    * store" for a store one rename away from being served.
     */
   def indexExists(spark: org.apache.spark.sql.SparkSession,
                   indexStore: String): Boolean = {
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(indexStore)
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     f.exists(p)
   }
-
-  /** Crash recovery for an interrupted [[rebuildIndex]] swap — the
-    * [[graft.ext.VectorIndex]] discipline: a missing root with a
-    * surviving `__old` restores the previous copy before any read or
-    * write. Called from [[liveStore]]'s consumers via [[readStore]].
-    */
-  private def recoverIfSwapped(spark: org.apache.spark.sql.SparkSession,
-                               indexStore: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val p = new org.apache.hadoop.fs.Path(indexStore)
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val pOld = new org.apache.hadoop.fs.Path(indexStore + "__old")
-      if (!f.exists(p) && f.exists(pOld))
-        require(f.rename(pOld, p),
-          s"index store recovery failed: cannot restore $pOld to $p")
-    }
 
   /** Lexical drift advisory, fed ENTIRELY from the persisted stores —
     * the [[graft.ext.VectorIndex.driftReportFromStats]] discipline on
@@ -793,7 +769,7 @@ object Retrieval {
     // a drift report after an interrupted swap failed with the
     // misleading "predates drift baselines" error instead of serving
     // the restored previous copy
-    recoverIfSwapped(spark, indexStore)
+    AtomicDir.recover(spark, indexStore)
     val p = new org.apache.hadoop.fs.Path(s"$indexStore/baseline/vocab")
     val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(f.exists(p),

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.engine.{AtomicDir, Compactor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,34 +73,15 @@ object VectorIndex {
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
+  /** Does a complete store live at `store`? First recovers a
+    * crash-interrupted [[rebuild]] swap ([[graft.engine.AtomicDir
+    * .recover]]); every entry point is gated on this probe.
+    */
   def exists(spark: SparkSession, store: String): Boolean = {
-    recoverIfSwapped(spark, store)
+    AtomicDir.recover(spark, store)
     val (p, f) = fs(spark, s"$store/meta")
     f.exists(p)
   }
-
-  /** Crash recovery for an interrupted [[rebuild]] swap: if a crash
-    * landed between the two renames, the store root is missing and
-    * `<store>__old` holds the previous copy — the truth. Restore it
-    * before any read or write (the BackupCatalog.recoverIfNeeded
-    * discipline). Called from [[exists]], which gates every entry
-    * point.
-    *
-    * The probe-then-rename pair runs under [[graft.engine.Compactor
-    * .swapLock]]: "root missing, __old present" is ALSO what a healthy
-    * in-flight swap looks like between its two renames, and an
-    * unserialized recovery would rename `__old` back mid-swap,
-    * aborting the live rebuild (r13; in-process only — across
-    * processes the store assumes a SINGLE writer, see [[rebuild]]).
-    */
-  private def recoverIfSwapped(spark: SparkSession, store: String): Unit =
-    graft.engine.Compactor.swapLock.synchronized {
-      val (p, f) = fs(spark, store)
-      val pOld = new org.apache.hadoop.fs.Path(store + "__old")
-      if (!f.exists(p) && f.exists(pOld))
-        require(f.rename(pOld, p),
-          s"store recovery failed: cannot restore $pOld to $p")
-    }
 
   private def readMeta(spark: SparkSession, store: String): IndexMeta = {
     require(exists(spark, store),
@@ -214,14 +196,13 @@ object VectorIndex {
     } finally e.unpersist()
   }
 
-  /** ATOMIC rebuild: retrain + re-encode into a STAGED sibling
-    * (`<store>__rebuild_tmp`), then publish via the checked-rename
-    * swap ([[graft.engine.Compactor.swapInto]]) — the action a
+  /** ATOMIC rebuild: retrain + re-encode into a STAGED sibling, then
+    * publish via [[graft.engine.AtomicDir.replace]] — the action a
     * tripped drift advisory (s22/s23) takes without ever exposing a
     * half-built store: a reader at ANY point during the retrain
     * serves the OLD model (spec-pinned via the beforeSwap hook), the
     * swap is all-or-nothing (two renames, rollback on failure), and a
-    * crash between them restores from `__old` on the next read
+    * crash between them restores the previous copy on the next read
     * ([[exists]]' recovery). Contrast [[init]], which deletes in
     * place — correct for bootstrap, unsafe under live readers.
     * Tombstones clear with the rebuild (the re-init semantics:
@@ -229,10 +210,10 @@ object VectorIndex {
     *
     * Writer contract: ONE rebuilder per store path at a time, in the
     * process that owns the store (readers are free). In-process,
-    * [[graft.engine.Compactor.swapLock]] serializes the swap against
-    * every concurrent read's crash recovery; across processes nothing
-    * can — a second JVM recovering mid-swap would rename `__old` back
-    * and abort the live rebuild.
+    * AtomicDir's lock serializes the swap against every concurrent
+    * read's crash recovery; across processes nothing can — a second
+    * JVM recovering mid-swap would restore the previous copy and
+    * abort the live rebuild.
     */
   def rebuild(embeddings: DataFrame, store: String, nlist: Int = 0,
               m: Int = 8, ksub: Int = 16, dim: Int = 64, iters: Int = 1,
@@ -247,16 +228,12 @@ object VectorIndex {
     val spark = embeddings.sparkSession
     require(exists(spark, store),
       s"no vector index store at $store to rebuild (run init first)")
-    val tmp = store + "__rebuild_tmp"
-    val (tp, tf) = fs(spark, tmp)
     // the writer lease spans the WHOLE retrain (r14): a second
     // process double-launching this rebuild refuses at entry instead
     // of racing the stage/swap — StoreLease's takeover rules apply
-    graft.engine.StoreLease.withLease(tf, store) {
-      tf.delete(tp, true) // a crashed rebuild's stage is garbage
-      init(embeddings, tmp, nlist, m, ksub, dim, iters, coarseIters)
+    AtomicDir.replace(fs(spark, store)._2, store) { stage =>
+      init(embeddings, stage, nlist, m, ksub, dim, iters, coarseIters)
       beforeSwap()
-      graft.engine.Compactor.swapInto(tf, store, tmp)
     }
   }
 
@@ -498,7 +475,7 @@ object VectorIndex {
     // batch). A DIVERGENT retry whose batch overlaps the crashed one
     // admits the overlap again under a different key and the folded
     // stats double-count it; [[reconcileDriftStats]] is the repair
-    // (one corpus scan, checked-rename swap) for non-streaming
+    // (one corpus scan, AtomicDir swap) for non-streaming
     // callers that cannot replay identically.
     val kr = fresh.agg(count(lit(1)), sum(col("vec_id")),
       min(col("vec_id"))).collect()(0)
@@ -559,9 +536,9 @@ object VectorIndex {
     * vectors-free [[delete]] whose subtraction never happened)
     * permanently double-counts the overlap in the folded stats. One
     * corpus scan writes the exact decimal statistics of `corpus` as a
-    * single reconcile batch and swaps it into place via the engine's
-    * checked-rename ([[graft.engine.Compactor.swapInto]] — crash-safe,
-    * never leaves the table missing). After it, [[driftReportFromStats]]
+    * single reconcile batch and swaps it into place via
+    * [[graft.engine.AtomicDir.replace]] (crash-safe, never leaves the
+    * table missing). After it, [[driftReportFromStats]]
     * equals the corpus-scan report over `corpus` bit for bit again
     * (spec-pinned), and subsequent [[update]] batches fold on top as
     * usual. The `r…` key prefix cannot collide with the `b…`/`d…`
@@ -576,9 +553,6 @@ object VectorIndex {
       coalesce(min(col("vec_id")), lit(0L))).collect()(0)
     val key = s"r${kr.getLong(0)}_${kr.getLong(1)}_${kr.getLong(2)}"
     val dir = s"$store/driftstats"
-    val (_, f) = fs(spark, dir)
-    val tmp = dir + "__reconcile_tmp"
-    f.delete(new org.apache.hadoop.fs.Path(tmp), true)
     // the i = -2 bookkeeping row: every tombstone existing at
     // reconcile time is now fully accounted (the supplied corpus IS
     // the survivors), so [[unreconciledTombstones]] stops counting
@@ -589,9 +563,10 @@ object VectorIndex {
     val mark = spark.range(1).select(lit(key).as("batch_key"),
       lit(-2).as("i"), lit(null).cast("decimal(38,18)").as("sx"),
       lit(covered).as("cnt"))
-    driftStatsOf(e, key).unionByName(mark)
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    graft.engine.Compactor.swapInto(f, dir, tmp)
+    AtomicDir.replace(fs(spark, dir)._2, dir) { stage =>
+      driftStatsOf(e, key).unionByName(mark)
+        .coalesce(1).write.mode("overwrite").parquet(stage)
+    }
   }
 
   /** Tombstoned ids whose drift statistics were never subtracted —
@@ -725,9 +700,8 @@ object VectorIndex {
 
   /** Physically compact the codes store: rewrite it as the folded,
     * tombstone-free row set ([[liveCodes]]) in few sized files, then
-    * publish via the engine's checked-rename swap
-    * ([[graft.engine.Compactor.swapInto]] — crash-safe, never leaves
-    * the store missing). Query results are unchanged BY CONSTRUCTION
+    * publish via [[graft.engine.AtomicDir.replace]] (crash-safe, never
+    * leaves the store missing). Query results are unchanged BY CONSTRUCTION
     * (reads already fold + anti-join; spec-pinned anyway); what
     * changes is the physics — N streaming drains' small append files
     * and replay duplicates stop accumulating. Tombstones stay in
@@ -740,25 +714,19 @@ object VectorIndex {
       s"no vector index store at $store (run init first)")
     val dir = s"$store/codes"
     val (p, f) = fs(spark, dir)
-    def dataFiles = f.listStatus(p).filter { s =>
-      val n = s.getPath.getName
-      s.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-    val before = dataFiles
+    val before = Compactor.dataFiles(f, p)
     // leased on the STORE root (not the codes subdir), so a compact
     // and a rebuild of the same store exclude each other cross-process
     graft.engine.StoreLease.withLease(f, store) {
       val rowsBefore = spark.read.parquet(dir).count()
-      val bytes = before.map(_.getLen).sum
       val nOut =
-        math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      val tmp = dir + "__compact_tmp"
-      f.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      liveCodes(spark, store).coalesce(nOut)
-        .write.mode("overwrite").parquet(tmp)
-      graft.engine.Compactor.swapInto(f, dir, tmp)
+        Compactor.targetFiles(before.map(_.getLen).sum, targetBytes)
+      AtomicDir.replace(f, dir) { stage =>
+        liveCodes(spark, store).coalesce(nOut)
+          .write.mode("overwrite").parquet(stage)
+      }
       CompactReport(rowsBefore, spark.read.parquet(dir).count(),
-        before.length, dataFiles.length)
+        before.length, Compactor.dataFiles(f, p).length)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.incremental
 
-import graft.engine.Compactor
+import graft.engine.{AtomicDir, Compactor}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * group-cardinality-bounded) shuffle; the merge is a union of two
   * summaries re-aggregated on the same keys — at 1000 sessions of a
   * 100 TB table the summary stays one small parquet dir while the
-  * alternative (recompute) re-reads everything. Publishing reuses the
-  * compactor's checked-rename swap, so readers never see a
+  * alternative (recompute) re-reads everything. Publishing goes
+  * through [[graft.engine.AtomicDir.replace]], so readers never see a
   * half-merged summary and a crashed merge is recoverable.
   */
 object Rollup {
@@ -73,27 +73,24 @@ object Rollup {
         col("min_v"), col("max_v")): _*)
 
   /** Maintain an on-disk summary: read the current state (if any),
-    * merge the delta's summary in, publish via checked-rename swap.
+    * merge the delta's summary in, publish via [[AtomicDir.replace]].
     * Returns the post-merge group count.
     */
   def maintain(spark: SparkSession, dir: String, delta: DataFrame,
                keyCols: Seq[String], valueCol: String): Long = {
-    Compactor.recover(spark, dir)
     val f = Compactor.fs(spark, dir)
+    AtomicDir.recover(f, dir)
     val deltaSum = summarize(delta, keyCols, valueCol)
     val merged =
       if (f.exists(new Path(dir)))
         merge(keyCols, spark.read.parquet(dir), deltaSum)
       else deltaSum
-    val tmp = dir + "__rollup_tmp"
-    f.delete(new Path(tmp), true)
     // group-cardinality output: coalesce(1) keeps the summary a
     // single file until it genuinely outgrows one (callers can
     // Compactor.compact it if a huge key domain ever makes it big)
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    if (f.exists(new Path(dir))) Compactor.swapInto(f, dir, tmp)
-    else require(f.rename(new Path(tmp), new Path(dir)),
-      s"cannot publish initial rollup at $dir")
+    AtomicDir.replace(f, dir) { stage =>
+      merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(stage)
+    }
     spark.read.parquet(dir).count()
   }
 }

@@ -122,8 +122,41 @@ class CompactorSpec extends SparkTestBase {
     val f = fsOf(dir)
     // simulate the crash window: dest staged to __old, tmp never landed
     require(f.rename(new Path(dir), new Path(dir + "__old")))
-    Compactor.recover(spark, dir)
+    AtomicDir.recover(f, dir)
     assert(spark.read.parquet(dir).count() == 5)
+  }
+
+  test("a partitioned destination whose partition swap crashed: " +
+    "compact restores the partition, drops the stale copy, and the " +
+    "table reads back its own partitions only") {
+    val dir = tmpDir("compact") + "/crashparts"
+    val src = Tables.lineitem(spark, sf0001)
+      .select("l_orderkey", "l_linenumber", "l_returnflag")
+    src.repartition(8).write.partitionBy("l_returnflag").parquet(dir)
+    val f = fsOf(dir)
+    val parts = f.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(_.contains("=")).sorted
+    assert(parts.length >= 2, parts.toSeq)
+    // crash between the renames: the partition staged to __old, the
+    // rewrite never landed
+    require(f.rename(new Path(dir, parts(0)),
+      new Path(dir, parts(0) + "__old")))
+    // crash after the publish: the new copy is live, the old survives
+    f.mkdirs(new Path(dir, parts(1) + "__old"))
+    f.listStatus(new Path(dir, parts(1))).filter(_.isFile).foreach(s =>
+      org.apache.hadoop.fs.FileUtil.copy(f, s.getPath, f,
+        new Path(dir, parts(1) + "__old/" + s.getPath.getName), false,
+        spark.sparkContext.hadoopConfiguration))
+    Compactor.compact(spark, dir, targetBytes = 1L << 30)
+    val left = f.listStatus(new Path(dir)).map(_.getPath.getName)
+      .filter(_.contains("=")).sorted
+    assert(left.toSeq == parts.toSeq, s"partition dirs after: $left")
+    val back = spark.read.parquet(dir)
+    assert(back.count() == src.count())
+    assert(back.select("l_returnflag").distinct().collect()
+      .map(_.getString(0)).toSet ==
+      src.select("l_returnflag").distinct().collect()
+        .map(_.getString(0)).toSet)
   }
 
   private def plantLease(root: String, holder: String): Path = {

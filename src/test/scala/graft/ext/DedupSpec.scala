@@ -256,18 +256,27 @@ class DedupSpec extends SparkTestBase {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(p => p._1 != p._2)
     } :+ (0L until 40L).map(i => (i, i + 1)) // pathological chain
-    for (pairs <- graphs) {
-      val df = pairs.toDF("doc_a", "doc_b")
+    // every other graph declares its id columns nullable (as a join
+    // output would): both paths must then return nullable columns
+    for ((pairs, i) <- graphs.zipWithIndex) {
+      val df =
+        if (i % 2 == 0) pairs.toDF("doc_a", "doc_b")
+        else pairs.map { case (a, b) => (Option(a), Option(b)) }
+          .toDF("doc_a", "doc_b")
       // public entry: under the edge valve, the driver union-find
-      val fold = Dedup.clusters(df).collect()
+      val foldDf = Dedup.clusters(df)
+      val fold = foldDf.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       // the past-the-valve path, forced on the same symmetric edges
       val edges = df.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(df.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .repartition(col("src"))
         .localCheckpoint(true)
-      val loop = Dedup.clustersLoop(edges, maxIters = 25).collect()
+      val loopDf = Dedup.clustersLoop(edges, maxIters = 25)
+      val loop = loopDf.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      assert(foldDf.schema == loopDf.schema,
+        s"cc fold schema ${foldDf.schema} != loop ${loopDf.schema}")
       assert(fold == loop,
         s"cc fold diverged from the loop on ${pairs.take(8)}…:\n" +
           s"  fold: ${fold.toSeq.sortBy(_._1).take(10)}\n" +
